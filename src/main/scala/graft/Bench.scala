@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -37,7 +39,7 @@ object Bench {
     // not as a plausible-looking elapsed time.
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try Tables.table(spark, sfDir, t).count() catch { case _: Throwable => () }
+      try Tables.table(spark, sfDir, t).count() catch { case NonFatal(_) => () }
     }
     // Dev-only knobs (unset on the driver's path): GRAFT_BENCH_ONLY
     // limits to comma-separated name prefixes; GRAFT_BENCH_PASSES sets
@@ -52,7 +54,7 @@ object Bench {
     // carry the compile constant.
     Seq("q01_pricing_summary", "l02_dedup_minhash_lsh").foreach { w =>
       try registry(w)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       CacheScope.releaseAll()
     }
     def timeAll(): Seq[(String, Double)] = registry.toSeq.sortBy(_._1).map { case (name, fn) =>

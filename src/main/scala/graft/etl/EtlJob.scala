@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * Differences from the reference, on purpose: phase counts come from one
   * cached pass instead of recomputing the frame per `df.count()` (the
   * reference recomputes the whole lineage at ETL:422/456), and the load
-  * is the partition-pruned MERGE rewrite instead of blind append.
+  * is a [[SnapshotMerge]] upsert (one epoch per run, only the touched
+  * partitions rewritten) instead of blind append.
   */
 object EtlJob {
 
@@ -29,16 +30,13 @@ object EtlJob {
       partitionCol: String,
       quarantineDir: Option[String] = None): Metrics = {
 
-    // extract (incremental, pushdown-friendly watermark filter). Probe
-    // existence via the filesystem — a try/catch around the read would
-    // misread a transient storage error as "no target" and silently
-    // disable incremental filtering for the run.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(targetDir), spark.sparkContext.hadoopConfiguration)
-    val targetExists = fs.exists(new org.apache.hadoop.fs.Path(targetDir))
-    val fresh =
-      if (targetExists) Incremental.newRows(source, spark.read.parquet(targetDir), watermarkCol)
-      else source
+    // extract (incremental, pushdown-friendly watermark filter). The
+    // target exists once its first manifest is committed — a try/catch
+    // around the read would misread a transient storage error as "no
+    // target" and silently disable incremental filtering for the run.
+    val target = SnapshotMerge.latestSnapshot(spark, targetDir)
+      .map(s => SnapshotMerge.read(spark, targetDir, Some(s.epoch)))
+    val fresh = target.fold(source)(Incremental.newRows(source, _, watermarkCol))
     val freshC = fresh.cache()
     val extracted = freshC.count()
 
@@ -60,14 +58,12 @@ object EtlJob {
     val deduped = Dedup.keepLatest(cleanCols, keys, tieBreak).cache()
     val dedupN = deduped.count()
 
-    // transform + load (partition-pruned upsert); count from the cached
-    // frame so the transform runs once, not once per action
+    // transform + load (partition-pruned upsert; an empty target
+    // bootstraps); count from the cached frame so the transform runs
+    // once, not once per action
     val out = transform(deduped).cache()
     val loaded = out.count()
-    if (targetExists)
-      Merge.upsertIntoParquet(spark, targetDir, out, keys, partitionCol)
-    else
-      out.write.partitionBy(partitionCol).parquet(targetDir)
+    SnapshotMerge.upsert(spark, targetDir, out, keys, partitionCol)
     quarantineDir.foreach(d => quarantined.write.mode(SaveMode.Append).parquet(d))
 
     freshC.unpersist(); validated.unpersist(); deduped.unpersist(); out.unpersist()

@@ -5,11 +5,12 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
-import graft.sources.CommitMarker
+import scala.util.control.NonFatal
 
-/** Snapshot-isolated MERGE store over plain parquet — the manifest log
-  * that closes the torn-reader window [[Merge.upsertIntoParquet]]
-  * documents as its residual scope (reference: delta-lake/delta_setup.py
+import graft.sources.PointerFile.deleteQuietly
+
+/** Snapshot-isolated MERGE store over plain parquet — graft's one table
+  * format for MERGE-maintained tables (reference: delta-lake/delta_setup.py
   * gets this from Delta's transaction log; this is the same protocol on
   * partition granularity, with no Delta jar in the environment).
   *
@@ -20,32 +21,35 @@ import graft.sources.CommitMarker
   *   store/day=2024-01-02/__e=7/part-*.parquet
   *   store/_GRAFT_SNAP_7                          // manifest: epoch, schema,
   *                                                //   partition -> epoch map
-  *   store/_GRAFT_EPOCH_7                         // CommitMarker claim files
+  *   store/_GRAFT_EPOCH_7                         // physical version claims
   * }}}
   *
-  * Why this shape and not [[VersionLog]]'s: VersionLog re-writes the FULL
-  * table per commit (fine for small marts, fatal at 100 TB); this store
-  * re-writes only the partitions a merge touches (like
-  * `Merge.upsertIntoParquet`) but publishes them as NEW `__e={epoch}`
-  * subdirectories plus one atomically-renamed manifest, never deleting a
-  * file any committed snapshot references. Readers therefore get:
+  * Why this shape: a full-copy version log re-writes the WHOLE table per
+  * commit (fine for small marts, fatal at 100 TB), and an in-place
+  * partition swap exposes readers to a torn mix of old and new
+  * partitions mid-publish. This store re-writes only the partitions a
+  * merge touches but publishes them as NEW `__e={epoch}` subdirectories
+  * plus one atomically-renamed manifest, never deleting a file any
+  * committed snapshot references. Readers therefore get:
   *
   *  - '''Snapshot isolation''': [[read]] resolves the newest manifest at
   *    PLAN time and pins exactly its files; a concurrent MERGE publishing
   *    epoch N+1 adds new directories and a new manifest but touches
   *    nothing epoch N references, so in-flight reads never see a torn
-  *    mix of old and new partitions (the failure mode the swap-based
-  *    store accepts and documents).
+  *    mix of old and new partitions.
   *  - '''Time travel''': `read(asOf = Some(e))` for any epoch still
-  *    inside the vacuum retention, on the partitioned store rather than
-  *    VersionLog's full-copy snapshots.
+  *    inside the vacuum retention, on the partitioned store itself.
   *  - '''Detect-and-fail concurrency''': THE MANIFEST IS THE COMMIT —
   *    logical epoch `base + 1` lands by an atomic no-overwrite rename
   *    (put-if-absent, Delta's log-commit shape), so a merge computed
   *    against a stale snapshot aborts at publish whatever physical
   *    claim it won, retracting its own moved `__e` directories.
-  *    [[CommitMarker.claimEpochFrom]] claims only hand out UNIQUE
-  *    physical `__e=k` version-dir numbers.
+  *    [[claimEpochFrom]] claims only hand out UNIQUE physical `__e=k`
+  *    version-dir numbers.
+  *  - '''Idempotent replay''': an empty store bootstraps through the
+  *    same MERGE path, so there is no first-write branch to guard — a
+  *    crashed first epoch is an uncommitted manifest no reader or later
+  *    writer consults, and a replayed keyed batch re-lands the same rows.
   *
   * Crash truth table (writer dies at any point):
   *  - before the claim → staging dir self-cleans / is an inert sibling;
@@ -55,22 +59,22 @@ import graft.sources.CommitMarker
   *    stays dense;
   *  - the manifest rename is the commit point (no-overwrite — atomic
   *    create-exclusive strength: HDFS/local/ABFS; raw S3A needs a
-  *    coordination layer, the same scope as CommitMarker).
+  *    coordination layer, see [[claimEpochFrom]]).
   *
   * Scale posture: the manifest is O(live partitions) of metadata read
   * once per plan — the same class as Delta's checkpoint, not a data
   * read. Reads hand Spark the explicit partition-version directories
   * with `basePath`, so the partition column stays a partition column:
   * partition pruning and pushed filters behave exactly as on the plain
-  * layout. MERGE cost is unchanged from `upsertIntoParquet` (one
-  * left-anti shuffle + touched-partition rewrite); publish adds one
-  * rename per touched partition and one manifest write.
+  * layout. A MERGE costs one left-anti shuffle + the touched-partition
+  * rewrite; publish adds one rename per touched partition and one
+  * manifest write.
   *
   * Contract: single logical schema per store (the manifest carries it;
-  * sources must present every store column — same contract as the swap
-  * store). Vacuumed epochs stop being time-travelable; a reader pinned
-  * to a snapshot older than the retention can lose files mid-read —
-  * Delta's VACUUM makes the identical trade.
+  * sources must present every store column). Vacuumed epochs stop being
+  * time-travelable; a reader pinned to a snapshot older than the
+  * retention can lose files mid-read — Delta's VACUUM makes the
+  * identical trade.
   */
 object SnapshotMerge {
 
@@ -154,6 +158,86 @@ object SnapshotMerge {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
+  private val ClaimPrefix = "_GRAFT_EPOCH_"
+
+  /** A second writer raced this one to the store's next epoch — its
+    * MERGE aborted BEFORE touching any partition. The store holds the
+    * winner's merge; rerun to apply this writer's changes on top. */
+  final class ConcurrentWriteException(msg: String)
+    extends RuntimeException(msg)
+
+  /** Parsed epoch numbers of the store's `_GRAFT_EPOCH_*` files.
+    * Foreign files sharing the prefix (a tool's `.bak`, a mid-copy
+    * `._COPYING_`) are SKIPPED, not fatal — one stray file must never
+    * wedge every future merge on the store. */
+  private def epochsOf(fs: FileSystem, p: Path): Seq[Long] =
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq
+      .map(_.getPath.getName)
+      .filter(_.startsWith(ClaimPrefix))
+      .flatMap(n => scala.util.Try(n.stripPrefix(ClaimPrefix).toLong).toOption)
+
+  /** Highest claimed physical epoch of the store (0 when none). */
+  def currentEpoch(spark: SparkSession, store: String): Long = {
+    val p = new Path(store)
+    epochsOf(fsOf(spark, p), p).foldLeft(0L)(math.max)
+  }
+
+  /** Atomic claim of the store's next PHYSICAL epoch number: the
+    * `create(overwrite = false)` of `_GRAFT_EPOCH_{base+1}` is the same
+    * create-exclusive primitive Delta's log commit rides. If any other
+    * writer claimed `base + 1` first, the file exists and the claim
+    * throws [[ConcurrentWriteException]] before any partition is
+    * touched. Claims only allocate unique `__e=k` version-dir numbers;
+    * the manifest rename in [[publish]] is what arbitrates commits.
+    * A writer that crashes after claiming leaves only a stale claim
+    * file; its retry claims the next number.
+    *
+    * FILESYSTEM SCOPE: the guarantee is exactly as strong as
+    * `create(overwrite = false)` exclusivity — atomic on HDFS, local,
+    * ABFS; NOT on raw S3A, whose create is a HEAD-then-PUT race (the
+    * reason Delta needs an external LogStore on S3). Deploy an S3 store
+    * behind a consistent committer/coordination layer if two truly
+    * simultaneous writers matter.
+    *
+    * The winner prunes claim files older than its base via ONE
+    * directory listing (bounded metadata, never data — and never
+    * O(historic epochs) of per-file probes). */
+  def claimEpochFrom(spark: SparkSession, store: String, base: Long): Long = {
+    val next = base + 1
+    val p = new Path(store, s"$ClaimPrefix$next")
+    val fs = fsOf(spark, p)
+    try fs.create(p, false).close()
+    catch {
+      // only EXISTENCE collisions are a concurrent writer; any other
+      // IO fault (network, permissions, quota) must surface as itself,
+      // not as a lie about another writer
+      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        throw concurrent(store, base, next, e)
+      case e: java.nio.file.FileAlreadyExistsException =>
+        throw concurrent(store, base, next, e)
+      // plain-IOException filesystems: classify by PROBING the claim
+      // file (message substrings are locale-dependent, and a lease error
+      // containing "exists" would lie about a concurrent writer); the
+      // message match is only the probe-failed fallback
+      case e: java.io.IOException
+          if existsAfterFailure(fs, p).getOrElse(alreadyExistsMessage(e)) =>
+        throw concurrent(store, base, next, e)
+    }
+    epochsOf(fs, new Path(store))
+      .filter(_ < base)
+      .foreach(e => fs.delete(new Path(store, s"$ClaimPrefix$e"), false))
+    next
+  }
+
+  private def concurrent(store: String, base: Long, next: Long,
+                         e: Exception): ConcurrentWriteException =
+    new ConcurrentWriteException(
+      s"another writer committed epoch $next of $store after this " +
+        s"writer read epoch $base — this MERGE aborted before touching " +
+        s"any partition; rerun to apply it on top of the winner's " +
+        s"state (${e.getMessage})")
+
   /** Data files only: `_`-prefixed control files AND `.`-prefixed
     * hidden files (local-FS `.part-*.crc` checksums roughly DOUBLE a
     * raw count — r15 ADVICE) are excluded, the same predicate Spark's
@@ -165,7 +249,7 @@ object SnapshotMerge {
 
   /** Epochs with a committed manifest, ascending (committed = the
     * manifest rename landed; foreign files sharing the prefix are
-    * skipped, as in CommitMarker). */
+    * skipped, as in [[epochsOf]]). */
   def committedEpochs(spark: SparkSession, store: String): Seq[Long] = {
     val p = new Path(store)
     val fs = fsOf(spark, p)
@@ -299,11 +383,10 @@ object SnapshotMerge {
       s"source must carry the partition column $partitionCol")
     requirePathStablePartitionType(
       source.schema(partitionCol).dataType, partitionCol)
-    // physical-version floor read BEFORE the manifest (the protocol
-    // order Merge.upsertIntoParquet documents) — not load-bearing for
+    // physical-version floor read BEFORE the manifest — not load-bearing for
     // the lost-update guarantee (the manifest create-exclusive below
     // is), but it keeps physical numbers monotone past in-flight claims
-    val claimFloor = CommitMarker.currentEpoch(spark, store)
+    val claimFloor = currentEpoch(spark, store)
     val base = latestSnapshot(spark, store)
     // Schema compatibility: every store column must arrive from the
     // source with ITS OWN TYPE. A name-only check would let a type
@@ -384,7 +467,7 @@ object SnapshotMerge {
       .getOrElse(affected)
     val merged = Merge.upsert(kept, source, keys)
     // partition METADATA (one value per touched partition), collected
-    // before any publish step — same bound as Merge.upsertIntoParquet
+    // before any publish step
     val touchedVals = touched.collect().map(r => Option(r.get(0)).map(_.toString))
     // EMPTY batch against an existing store: nothing to stage — return
     // the current epoch instead of burning one (a recovery replay of a
@@ -411,7 +494,7 @@ object SnapshotMerge {
     * logical next epoch is `base + 1` and the manifest lands by an
     * atomic no-overwrite rename — if ANY other writer committed
     * `base + 1` first, the rename fails and this writer aborts with
-    * [[CommitMarker.ConcurrentWriteException]], whatever physical claim
+    * [[ConcurrentWriteException]], whatever physical claim
     * it won. This is what makes the lost-update window airtight: a
     * writer that computed against manifest N can ONLY publish manifest
     * N+1, and exactly one N+1 can exist — an in-flight writer between
@@ -450,7 +533,7 @@ object SnapshotMerge {
     // base floor: every version the base manifest references plus the
     // entry-time claim state
     val physFloor = math.max(
-      math.max(claimFloor, CommitMarker.currentEpoch(spark, store)),
+      math.max(claimFloor, currentEpoch(spark, store)),
       base.map(s => (s.parts.values ++ Iterator(s.epoch)).max).getOrElse(0L))
     // Stage, then OBSERVE the staged stats, then claim: the footer-count
     // job and the per-partition listing depend only on the staging dir
@@ -495,7 +578,7 @@ object SnapshotMerge {
         (dirs, stats)
       } catch {
         case e: Throwable =>
-          try fs.delete(stagingPath, true) catch { case _: Throwable => () }
+          deleteQuietly(fs, stagingPath, recursive = true)
           throw e
       }
     val stagedNames = stagedDirs.map(_.getPath.getName).toSet
@@ -509,27 +592,27 @@ object SnapshotMerge {
         // allocators, not commit arbiters, so a collision in the tiny
         // read-to-create window just means the number was taken — bump
         // and retry (bounded), never abort a tip-based merge over it.
-        var floor = math.max(physFloor, CommitMarker.currentEpoch(spark, store))
+        var floor = math.max(physFloor, currentEpoch(spark, store))
         var claimed = -1L
         var attempts = 0
         while (claimed < 0) {
-          try claimed = CommitMarker.claimEpochFrom(spark, store, floor)
+          try claimed = claimEpochFrom(spark, store, floor)
           catch {
-            case e: CommitMarker.ConcurrentWriteException =>
+            case e: ConcurrentWriteException =>
               attempts += 1
               if (attempts >= 5) throw e
-              floor = math.max(floor + 1, CommitMarker.currentEpoch(spark, store))
+              floor = math.max(floor + 1, currentEpoch(spark, store))
           }
         }
         claimed
       } catch {
         case e: Throwable =>
-          try fs.delete(stagingPath, true) catch { case _: Throwable => () }
+          deleteQuietly(fs, stagingPath, recursive = true)
           throw e
       }
     val movedIn = Seq.newBuilder[Path]
     def dropMovedIn(): Unit = movedIn.result().foreach { d =>
-      try fs.delete(d, true) catch { case _: Throwable => () }
+      deleteQuietly(fs, d, recursive = true)
     }
     try {
       stagedDirs.foreach { st =>
@@ -557,7 +640,7 @@ object SnapshotMerge {
     } catch {
       case e: Throwable =>
         dropMovedIn()
-        try fs.delete(stagingPath, true) catch { case _: Throwable => () }
+        deleteQuietly(fs, stagingPath, recursive = true)
         throw e
     }
     // a touched partition with no staged dir ended EMPTY (its only rows
@@ -581,7 +664,7 @@ object SnapshotMerge {
       // and the rename — and the rename itself still arbitrates `next`.
       val tip = committedEpochs(spark, store).lastOption.getOrElse(0L)
       if (tip != next - 1)
-        throw new CommitMarker.ConcurrentWriteException(
+        throw new ConcurrentWriteException(
           s"the tip of $store is epoch $tip but this merge was computed " +
             s"against epoch ${next - 1} (its put-if-absent sentinel may " +
             "have been vacuumed while the merge staged) — aborted; rerun " +
@@ -607,13 +690,13 @@ object SnapshotMerge {
     } catch {
       case e: Throwable =>
         dropMovedIn() // the loser's additive dirs — referenced by nothing
-        try fs.delete(stagingPath, true) catch { case _: Throwable => () }
+        deleteQuietly(fs, stagingPath, recursive = true)
         throw e
     }
     // staging cleanup only AFTER the commit: a cleanup hiccup must not
     // abort a completed publish (an orphan staging dir is an inert
-    // sibling no reader lists — Merge.scala documents the same)
-    try fs.delete(stagingPath, true) catch { case _: Throwable => () }
+    // sibling no reader lists)
+    deleteQuietly(fs, stagingPath, recursive = true)
     next
   }
 
@@ -626,7 +709,7 @@ object SnapshotMerge {
     * exist (→ a concurrent writer won it)? None when the probe itself
     * fails — the caller falls back to message classification. */
   private[etl] def existsAfterFailure(fs: FileSystem, dest: Path): Option[Boolean] =
-    try Some(fs.exists(dest)) catch { case _: Throwable => None }
+    try Some(fs.exists(dest)) catch { case NonFatal(_) => None }
 
   private def alignTo(df: DataFrame, schema: StructType): DataFrame =
     schema.fields.foldLeft(df) { (d, f) =>
@@ -635,7 +718,7 @@ object SnapshotMerge {
     }.select(schema.fields.map(f => col(f.name)).toIndexedSeq: _*)
 
   /** Partition dir names are derived from collected values via
-    * `toString` (the same approach as [[Merge.upsertIntoParquet]]), so
+    * `toString`, so
     * the partition column must be a type whose string form round-trips
     * Spark's partition-path formatting exactly. Timestamps (session-
     * timezone formatted, sub-second suffix), floating point (scientific
@@ -670,7 +753,7 @@ object SnapshotMerge {
     * — atomic put-if-absent of the logical epoch. A rename collision
     * means another writer committed this epoch first: the merge was
     * computed against a stale snapshot and must abort
-    * (same create-exclusive strength scope as CommitMarker: atomic on
+    * (same create-exclusive strength scope as [[claimEpochFrom]]: atomic on
     * HDFS/local/ABFS; raw S3A needs a coordination layer). */
   private def writeManifest(fs: FileSystem, spark: SparkSession,
                             storePath: Path, snap: Snapshot): Unit = {
@@ -701,8 +784,8 @@ object SnapshotMerge {
       fs.getUri, spark.sessionState.newHadoopConf())
     val dest = fs.makeQualified(new Path(storePath, s"$SnapPrefix${snap.epoch}"))
     def lost(e: Exception): Nothing = {
-      try fs.delete(tmp, false) catch { case _: Throwable => () }
-      throw new CommitMarker.ConcurrentWriteException(
+      deleteQuietly(fs, tmp, recursive = false)
+      throw new ConcurrentWriteException(
         s"another writer committed epoch ${snap.epoch} of $storePath " +
           "after this writer read its base snapshot — this merge " +
           "aborted; its partition versions were retracted; rerun to " +
@@ -728,15 +811,14 @@ object SnapshotMerge {
           if existsAfterFailure(fs, dest).getOrElse(alreadyExistsMessage(e)) =>
         lost(e)
       case e: Throwable =>
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
+        deleteQuietly(fs, tmp, recursive = false)
         throw e
     }
   }
 
   /** RESTORE the store to a prior epoch (Delta RESTORE parity — the
     * reference restores managed tables to a version,
-    * delta_setup.py:581-596; [[VersionLog.restore]] gives the verb on
-    * the full-copy swap store): commits a NEW manifest whose
+    * delta_setup.py:581-596): commits a NEW manifest whose
     * (partition → version) map, schema, and stats are `epoch`'s —
     * METADATA-ONLY, no data file is moved or rewritten (the old version
     * dirs are still on disk inside the vacuum retention; the new
@@ -753,7 +835,7 @@ object SnapshotMerge {
     * probes, a rare-verb cost. Restoring to the current tip is a no-op
     * (returns None, no epoch burned). Concurrency: the same
     * tip-gate + manifest create-exclusive as every writer — a restore
-    * racing a merge aborts with [[CommitMarker.ConcurrentWriteException]]
+    * racing a merge aborts with [[ConcurrentWriteException]]
     * rather than silently undoing it. */
   def restoreTo(spark: SparkSession, store: String, epoch: Long): Option[Long] = {
     val storePath = new Path(store)
@@ -782,7 +864,7 @@ object SnapshotMerge {
       // sweep loop finishes inside the grace, and once the manifest
       // below lands the dirs are referenced by a kept tip forever.
       try fs.setTimes(d, System.currentTimeMillis(), -1)
-      catch { case _: Throwable => () } // best-effort; the verify below remains
+      catch { case NonFatal(_) => () } // best-effort; the verify below remains
     }
     val next = base.epoch + 1
     // the same zombie gate as publish: the tip must still be our base at
@@ -790,7 +872,7 @@ object SnapshotMerge {
     // the rename — see publish); the manifest rename arbitrates the rest
     val tip = committedEpochs(spark, store).lastOption.getOrElse(0L)
     if (tip != base.epoch)
-      throw new CommitMarker.ConcurrentWriteException(
+      throw new ConcurrentWriteException(
         s"the tip of $store moved to $tip while restoring against " +
           s"${base.epoch} — aborted; rerun the restore against the new tip")
     writeManifest(fs, spark, storePath,
@@ -813,7 +895,7 @@ object SnapshotMerge {
     lost.foreach { d =>
       try writeManifest(fs, spark, storePath,
         Snapshot(next + 1, base.schema, base.parts, base.stats, dataChange = true))
-      catch { case _: Throwable => () } // adjudicated by the probe below
+      catch { case NonFatal(_) => () } // adjudicated by the probe below
       // the catch above swallows BOTH "a racer took next+1" and a
       // genuine repair failure (transient fault, permissions) — probe
       // which happened and say so, or the operator would trust a
@@ -827,7 +909,7 @@ object SnapshotMerge {
       // pre-restore tip's.
       val repaired = isCommitted(spark, store, next + 1) &&
         (try snapshot(spark, store, next + 1).parts == base.parts
-        catch { case scala.util.control.NonFatal(_) => false })
+        catch { case NonFatal(_) => false })
       throw new IllegalStateException(
         s"restore of $store to epoch $epoch lost $d to a concurrent " +
           s"vacuum mid-commit — " + (if (repaired)
@@ -871,8 +953,7 @@ object SnapshotMerge {
 
   /** DESCRIBE HISTORY analog (Delta parity — the reference inspects
     * table history for its rollback/audit runbooks,
-    * delta_setup.py:581-596 neighborhood; [[VersionLog.history]] gives
-    * the verb on the full-copy store): one row per RETAINED epoch, from
+    * delta_setup.py:581-596 neighborhood): one row per RETAINED epoch, from
     * manifest metadata alone — epoch, operation kind, live partition
     * count, and the file/byte/row totals the `partv2`/`partv3` stat
     * lines carry (`rows` is null when any entry predates `partv3`, and
@@ -992,8 +1073,7 @@ object SnapshotMerge {
   }
 
   /** Change feed between two committed epochs (Delta CDF analog on the
-    * PARTITIONED store — [[VersionLog.changes]] gives the same contract
-    * on full-copy snapshots): full-row diff via `exceptAll` — rows only
+    * PARTITIONED store): full-row diff via `exceptAll` — rows only
     * in `toE` are inserts, rows only in `fromE` deletes, an update one
     * of each. Columns are aligned by name against `toE`'s manifest
     * schema (schema evolution adds columns; older snapshots read them
@@ -1049,7 +1129,7 @@ object SnapshotMerge {
       selectTouched: DataFrame => DataFrame,
       rewrite: DataFrame => DataFrame,
       guard: (Snapshot, String) => Unit = (_, _) => ()): Option[Long] = {
-    val claimFloor = CommitMarker.currentEpoch(spark, store)
+    val claimFloor = currentEpoch(spark, store)
     val base = latestSnapshot(spark, store).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $store"))
     if (base.parts.isEmpty) return None
@@ -1495,7 +1575,7 @@ object SnapshotMerge {
         val numTasks = math.max(1L, math.min(1L << 15, 2L * totalBins)).toInt
         val compacted = binned.repartition(numTasks, col("__gbin")).select(dataCols: _*)
         committed = Some(publish(spark, store, Some(tip),
-          CommitMarker.currentEpoch(spark, store), compacted,
+          currentEpoch(spark, store), compacted,
           partitionCol, live.toSet, tip.schema, dataChange = false,
           writeOptions =
             cap.map(c => Map("maxRecordsPerFile" -> c.toString)).getOrElse(Map.empty)))
@@ -1723,6 +1803,69 @@ object SnapshotMerge {
   }
 
   // ------------------------------------------------------------------
+  // q47 — the change feed between two commits under the oracle: two
+  // deterministic states of the events fixture committed as epochs 1
+  // and 2 of a day-partitioned store keyed on event_id, then
+  // `changes(1, 2)` rolled up per (change type, event type). The oracle
+  // is plain EXCEPT ALL / UNION ALL SQL over the same fixture.
+  //
+  // States (pure functions of `events`):
+  //  - v0 = event_id % 10 < 8                       (the baseline)
+  //  - v1 = event_id % 10 < 9, minus 'error' rows,  (inserts + deletes)
+  //    with click values bumped by 10                (updates → del+ins)
+  // v1 lands as ONE epoch through [[applyChanges]]: its rows upsert by
+  // event_id and the v0 keys it lacks are deleted in the same commit,
+  // so epoch 2 holds exactly v1. The keyed commit is exact because
+  // event_id is unique in the fixture; `day` rides every row but is a
+  // function of event_id, so the full-row diff nets to the oracle's.
+  // ------------------------------------------------------------------
+
+  private def q47Store(spark: SparkSession, sfDir: String): String =
+    graft.GateFixture.cached("graft_snapchanges_q47", sfDir) { root =>
+      val store = root.toString + "/store"
+      val ev = graft.Tables.events(spark, sfDir)
+        .select(col("event_id"), col("event_type"), col("value"),
+          to_date(col("ts")).cast("string").as("day"))
+      val v0 = ev.filter(col("event_id") % 10 < 8)
+      val v1 = ev.filter(col("event_id") % 10 < 9)
+        .filter(col("event_type").isNull || col("event_type") =!= "error")
+        .withColumn("value",
+          when(col("event_type") === "click", col("value") + lit(10.0)).otherwise(col("value")))
+      upsert(spark, store, v0, Seq("event_id"), "day")
+      applyChanges(spark, store, v1, v0.join(v1, Seq("event_id"), "left_anti"),
+        Seq("event_id"), "day")
+      store
+    }
+
+  /** q47 — the v0 → v1 change feed rolled up per (change type, event
+    * type). */
+  def versionChangesRollup(spark: SparkSession, sfDir: String): DataFrame = {
+    import graft.functions.Det.dsum
+    changes(spark, q47Store(spark, sfDir), 1L, 2L)
+      .groupBy("_change_type", "event_type")
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
+      // nulls-last matches the oracle engine's ORDER BY default (Spark
+      // defaults nulls-first) — event_type is nullable by contract
+      .orderBy(col("_change_type"), col("event_type").asc_nulls_last)
+  }
+
+  private val q47Sql = {
+    val dsum = graft.functions.Det.sqlDsum _
+    s"""WITH ev AS (SELECT event_id, event_type, value FROM events),
+       |a AS (SELECT event_id, event_type, value FROM ev WHERE event_id % 10 < 8),
+       |b AS (SELECT event_id, event_type,
+       |        CASE WHEN event_type = 'click' THEN value + cast(10.0 as double) ELSE value END AS value
+       |      FROM ev WHERE event_id % 10 < 9 AND (event_type <> 'error' OR event_type IS NULL)),
+       |ins AS (SELECT * FROM b EXCEPT ALL SELECT * FROM a),
+       |del AS (SELECT * FROM a EXCEPT ALL SELECT * FROM b),
+       |feed AS (
+       |  SELECT 'insert' AS _change_type, event_type, value FROM ins
+       |  UNION ALL SELECT 'delete' AS _change_type, event_type, value FROM del)
+       |SELECT _change_type, event_type, count(*) AS n, ${dsum("value")} AS total_value
+       |FROM feed GROUP BY 1,2 ORDER BY 1,2""".stripMargin
+  }
+
+  // ------------------------------------------------------------------
   // q110 — the snapshot store end-to-end under the driver's oracle:
   // bootstrap + two MERGE epochs (updates, inserts, and a moved
   // partition key in each), then aggregate the FINAL snapshot through
@@ -1805,9 +1948,8 @@ object SnapshotMerge {
     * between the bootstrap epoch and the final epoch of q110's store
     * (updates surface as delete+insert, the epoch-2 moved-day keys diff
     * in both partitions), rolled up per change type and day. The oracle
-    * recomputes the same full-row diff with EXCEPT ALL in DuckDB —
-    * q47 proves the contract on [[VersionLog]]'s full-copy snapshots;
-    * this row proves it on the partition-incremental manifest store. */
+    * recomputes the same full-row diff with EXCEPT ALL in DuckDB (q47
+    * states the same contract with its deletes applied in one epoch). */
   def snapshotChangesRollup(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Det.dsum
     val store = q110Store(spark, sfDir)
@@ -2036,6 +2178,7 @@ object SnapshotMerge {
        |FROM s2""".stripMargin
 
   def all: Seq[graft.Q] = Seq(
+    graft.Q("q47_version_changes", (s, d) => versionChangesRollup(s, d), Some(q47Sql)),
     graft.Q("q110_snapshot_merge", (s, d) => snapshotMergeRollup(s, d), Some(q110Sql)),
     graft.Q("q111_snapshot_changes", (s, d) => snapshotChangesRollup(s, d), Some(q111Sql)),
     graft.Q("q113_snapshot_changes_keyed",

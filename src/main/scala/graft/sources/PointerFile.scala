@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -39,7 +41,7 @@ object PointerFile {
     } catch {
       case e: InterruptedException =>
         Thread.currentThread().interrupt(); None
-      case scala.util.control.NonFatal(_) => None
+      case NonFatal(_) => None
     }
 
   /** Best-effort write — swallows every failure (the value is
@@ -62,10 +64,19 @@ object PointerFile {
       // interrupt status rather than vanish, and fatal VM errors must
       // propagate (r17 ADVICE)
       case e: InterruptedException =>
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
+        deleteQuietly(fs, tmp, recursive = false)
         Thread.currentThread().interrupt()
-      case scala.util.control.NonFatal(_) =>
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
+      case NonFatal(_) =>
+        deleteQuietly(fs, tmp, recursive = false)
     }
   }
+
+  /** Best-effort delete for cleanup paths (this file's tmp pointers and
+    * every staging/abort cleanup of [[graft.etl.SnapshotMerge]]): an
+    * ordinary failure — an `IOException`, a `false` return — is
+    * swallowed, because the caller's own result or error is what must
+    * surface and the leftover is inert. Fatal errors (VM errors,
+    * linkage errors, interruption) propagate. */
+  private[graft] def deleteQuietly(fs: FileSystem, p: Path, recursive: Boolean): Unit =
+    try { fs.delete(p, recursive); () } catch { case NonFatal(_) => () }
 }

@@ -446,7 +446,8 @@ class PlanSpec extends SparkSuite {
     // the merged path's RAW estimates over the persisted table — must
     // EQUAL the direct estimates, not merely approximate them
     val merged = graft.sources.PartitionedLayout
-      .mergedWeeklyEstimates(spark, graft.sources.PartitionedLayout.sketchTableDir(sf))
+      .mergedWeeklyEstimates(
+        spark.read.parquet(graft.sources.PartitionedLayout.sketchTableDir(sf)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(merged === direct,
       s"storage round-trip + union must be the identity on HLL state: $merged vs $direct")
@@ -507,11 +508,12 @@ class PlanSpec extends SparkSuite {
     // (day, bucket, cnt) set to the batch build under any slicing
     graft.streaming.StreamingOracle.streamingHistogramMaintain(spark, sf).collect()
     graft.sources.PartitionedLayout.quantileHistogramRollup(spark, sf).collect()
-    def rowsOf(dir: String) = spark.read.parquet(dir)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df
       .select(col("day").cast("string"), col("bucket"), col("cnt"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val streamed = rowsOf(graft.streaming.StreamingOracle.lastHistStoreDir.get)
-    val batch = rowsOf(graft.sources.PartitionedLayout.histStoreDir(sf))
+    val streamed = rowsOf(graft.etl.SnapshotMerge.read(spark,
+      graft.streaming.StreamingOracle.lastHistStoreDir.get))
+    val batch = rowsOf(spark.read.parquet(graft.sources.PartitionedLayout.histStoreDir(sf)))
     assert(streamed === batch,
       s"exact-addition merge must land on the identical store: ${
         (streamed diff batch).take(3)} vs ${(batch diff streamed).take(3)}")
@@ -532,7 +534,7 @@ class PlanSpec extends SparkSuite {
     val b1 = ev.filter(col("event_id") % 2 === 1).drop("event_id")
     graft.streaming.StreamingOracle.mergeHistogramBatch(b0, 0L, dir)
     graft.streaming.StreamingOracle.mergeHistogramBatch(b1, 1L, dir)
-    def snap() = spark.read.parquet(dir)
+    def snap() = graft.etl.SnapshotMerge.read(spark, dir)
       .select(col("day").cast("string"), col("bucket"), col("cnt"), col("src_batch"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val before = snap()
@@ -550,28 +552,31 @@ class PlanSpec extends SparkSuite {
     assert(before.map(t => (t._1, t._2, t._3)) === direct)
   }
 
-  test("q102 first write is replay-safe: a half-written batch 0 re-runs the Overwrite, not a merge") {
-    // the ADVICE r12 scenario: trigger 0 fails after creating the store
-    // directory but before the commit marker. A bare directory probe
-    // would take the merge branch and read the partial store; the
-    // _SUCCESS gate must instead re-run the first-write Overwrite, and
-    // a replay AFTER a committed batch must merge idempotently (HLL
-    // union is a per-register max).
+  test("q102 first write is replay-safe: a crashed first trigger's staged version is invisible and the retry converges") {
+    // trigger 0 crashed after claiming its physical version and moving a
+    // partition in, but before its manifest: the store holds a claim
+    // file and an `__e` dir of junk, and NO committed epoch. Its retry
+    // must bootstrap past the claim without ever reading the junk, and
+    // a replay AFTER the commit must merge idempotently (HLL union is a
+    // per-register max).
     val dir = java.nio.file.Files.createTempDirectory("q102_replay").toString + "/store"
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), to_date(col("ts")).as("day"), col("user_id"))
     val b0 = ev.filter(col("event_id") % 2 === 0).drop("event_id")
-    // simulate the partial first trigger: directory present, junk file
-    // inside, NO _SUCCESS marker
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-junk.parquet"),
-      Array[Byte](1, 2, 3))
+    val crashed = java.nio.file.Paths.get(dir, "day=2024-01-01", "__e=1")
+    java.nio.file.Files.createDirectories(crashed)
+    java.nio.file.Files.write(crashed.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_GRAFT_EPOCH_1"))
+    assert(graft.etl.SnapshotMerge.committedEpochs(spark, dir).isEmpty)
     graft.streaming.StreamingOracle.mergeSketchBatch(b0, dir) // the retry of batch 0
-    def snap() = spark.read.parquet(dir)
+    def snap() = graft.etl.SnapshotMerge.read(spark, dir)
       .select(col("day").cast("string"), hll_sketch_estimate(col("sketch")).as("est"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val after = snap()
-    assert(after.nonEmpty, "the retried Overwrite must land a readable store")
+    val direct = b0.groupBy(col("day").cast("string"))
+      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"))))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(after === direct, "the retry must land exactly batch 0, never the junk")
     // replaying the SAME batch against the now-committed store must be
     // a no-op estimate-wise (register max absorbs the duplicate)
     graft.streaming.StreamingOracle.mergeSketchBatch(b0, dir)
@@ -580,20 +585,22 @@ class PlanSpec extends SparkSuite {
 
   test("store gate survives a committer that writes no _SUCCESS (marksuccessfuljobs=false posture)") {
     // the object-store tuning the stores' design targets: the committer
-    // never writes _SUCCESS. Gating on _SUCCESS alone would make every
-    // later trigger re-take the first-write Overwrite and wipe merged
-    // state down to its own partials; the engine's own commit marker
-    // must keep the merge branch engaged.
+    // never writes _SUCCESS. The manifest is the store's only commit
+    // authority, so the second batch must still MERGE into the first.
+    val noSuccess = graft.SessionClones.cloned("plan-spec-nosuccess", spark) { s =>
+      s.conf.set("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    }
     val dir = java.nio.file.Files.createTempDirectory("q102_nosuccess").toString + "/store"
-    val ev = Tables.events(spark, sf)
+    val ev = Tables.events(noSuccess, sf)
       .select(col("event_id"), to_date(col("ts")).as("day"), col("user_id"))
     val b0 = ev.filter(col("event_id") % 2 === 0).drop("event_id")
     val b1 = ev.filter(col("event_id") % 2 === 1).drop("event_id")
     graft.streaming.StreamingOracle.mergeSketchBatch(b0, dir)
-    // simulate marksuccessfuljobs=false: remove the committer's marker
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-    graft.streaming.StreamingOracle.mergeSketchBatch(b1, dir) // MUST merge, not Overwrite
-    val merged = spark.read.parquet(dir)
+    graft.streaming.StreamingOracle.mergeSketchBatch(b1, dir) // MUST merge, not replace
+    val successes = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(_.getFileName.toString == "_SUCCESS").count()
+    assert(successes === 0L, "no _SUCCESS lands anywhere in the store")
+    val merged = graft.etl.SnapshotMerge.read(spark, dir)
       .select(col("day").cast("string"), hll_sketch_estimate(col("sketch")).as("est"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val direct = ev.groupBy(to_date(col("day")).as("d"))
@@ -615,11 +622,12 @@ class PlanSpec extends SparkSuite {
       s"approx_ok must hold on the stream-maintained store: ${out.mkString}")
     graft.sources.PartitionedLayout.sketchTableRollup(spark, sf).collect()
     val streamed = graft.sources.PartitionedLayout
-      .mergedWeeklyEstimates(spark,
-        graft.streaming.StreamingOracle.lastSketchStoreDir.get)
+      .mergedWeeklyEstimates(graft.etl.SnapshotMerge.read(spark,
+        graft.streaming.StreamingOracle.lastSketchStoreDir.get))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batch = graft.sources.PartitionedLayout
-      .mergedWeeklyEstimates(spark, graft.sources.PartitionedLayout.sketchTableDir(sf))
+      .mergedWeeklyEstimates(
+        spark.read.parquet(graft.sources.PartitionedLayout.sketchTableDir(sf)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(streamed === batch,
       s"stream-maintained store must equal the batch build: $streamed vs $batch")

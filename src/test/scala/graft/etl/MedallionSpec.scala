@@ -77,7 +77,7 @@ class MedallionSpec extends SparkSuite {
     assert(m2.quarantined === 1)
     assert(m2.loaded === 2)
 
-    val loaded = spark.read.parquet(target)
+    val loaded = SnapshotMerge.read(spark, target)
     assert(loaded.count() === 4)
     assert(loaded.select("event_id").as[Long].collect().toSet === Set(1L, 2L, 4L, 5L))
   }

@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.SparkSuite
-import graft.sources.CommitMarker
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,6 +15,22 @@ object SnapshotMergeSpec {
   val racerFired = new java.util.concurrent.atomic.AtomicBoolean(false)
   @volatile var racerTarget: java.io.File = _
   @volatile var racerContent: Array[Byte] = _
+}
+
+/** `file://` FileSystem whose deletes fail on demand — installed through
+  * `fs.file.impl` on a cloned session, the way NioLocalFileSystem is
+  * installed, to exercise the store's cleanup paths. */
+class FailingDeleteFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    FailingDeleteFileSystem.failure(p) match {
+      case Some(t) => throw t
+      case None => super.delete(p, recursive)
+    }
+}
+
+object FailingDeleteFileSystem {
+  @volatile var failure: org.apache.hadoop.fs.Path => Option[Throwable] = _ => None
+  final class InjectedFatal extends VirtualMachineError("injected fatal error")
 }
 
 class SnapshotMergeSpec extends SparkSuite {
@@ -109,7 +124,7 @@ class SnapshotMergeSpec extends SparkSuite {
   }
 
   test("concurrent writers at the protocol level: a merge computed against a stale snapshot cannot publish") {
-    // deterministic interleave (the MergeConcurrencySpec pattern): writer
+    // deterministic interleave: writer
     // B reads base epoch 1, writer A commits epoch 2 in between, B's
     // publish-time claim of epoch 2 must fail — and the store afterwards
     // is exactly A's snapshot, never a torn mix
@@ -117,11 +132,11 @@ class SnapshotMergeSpec extends SparkSuite {
     bootstrap(store)
     val baseB = math.max(
       SnapshotMerge.latestSnapshot(spark, store).map(_.epoch).getOrElse(0L),
-      CommitMarker.currentEpoch(spark, store)) // B's stale read: 1
+      SnapshotMerge.currentEpoch(spark, store)) // B's stale read: 1
     SnapshotMerge.upsert(spark, store, // A runs fully: commits epoch 2
       Seq((2L, "fromA", "d1", 20L)).toDF("id", "v", "day", "ts"), Seq("id"), "day")
-    val e = intercept[CommitMarker.ConcurrentWriteException] {
-      CommitMarker.claimEpochFrom(spark, store, baseB) // B's publish gate
+    val e = intercept[SnapshotMerge.ConcurrentWriteException] {
+      SnapshotMerge.claimEpochFrom(spark, store, baseB) // B's publish gate
     }
     assert(e.getMessage.contains("aborted before touching any partition"), e.getMessage)
     assert(SnapshotMerge.committedEpochs(spark, store) === Seq(1L, 2L))
@@ -165,7 +180,7 @@ class SnapshotMergeSpec extends SparkSuite {
     bootstrap(store)
     // simulate a writer that claimed physical version 2 and died before
     // its manifest
-    CommitMarker.claimEpochFrom(spark, store, 1L)
+    SnapshotMerge.claimEpochFrom(spark, store, 1L)
     // readers still see epoch 1; the next writer burns PHYSICAL 2 but
     // commits LOGICAL epoch 2 — manifest numbers never skip
     assert(asMap(SnapshotMerge.read(spark, store))(2L) === ("b", "d1", 10L))
@@ -200,7 +215,7 @@ class SnapshotMergeSpec extends SparkSuite {
             SnapshotMergeSpec.racerContent)
         true
       }
-    val e = intercept[CommitMarker.ConcurrentWriteException] {
+    val e = intercept[SnapshotMerge.ConcurrentWriteException] {
       SnapshotMerge.upsert(spark, store, sourceB, Seq("id"), "day")
     }
     // the zombie gate catches the stale base BEFORE the rename; a racer
@@ -1184,6 +1199,64 @@ class SnapshotMergeSpec extends SparkSuite {
     val hits1 = SnapshotMerge.tipPointerHits.get()
     assert(SnapshotMerge.tipEpoch(spark, store) === Some(7L))
     assert(SnapshotMerge.tipPointerHits.get() === hits1 + 1)
+  }
+
+  test("epoch claim files are invisible to readers and pruned to bounded metadata") {
+    val store = freshStore()
+    bootstrap(store)
+    (1 to 5).foreach { i =>
+      SnapshotMerge.upsert(spark, store,
+        Seq((10L + i, s"v$i", "d1", i.toLong)).toDF("id", "v", "day", "ts"),
+        Seq("id"), "day")
+    }
+    assert(SnapshotMerge.currentEpoch(spark, store) === 6L)
+    assert(SnapshotMerge.read(spark, store).count() === 8L)
+    // pruned: at most the current and previous claim files survive
+    val claims = new java.io.File(store).listFiles()
+      .map(_.getName).filter(_.startsWith("_GRAFT_EPOCH_")).toSeq
+    assert(claims.size <= 2, s"claim files must stay bounded: $claims")
+  }
+
+  test("cleanup deletes are best-effort: an IOException is swallowed so the merge's own error surfaces; a fatal error propagates") {
+    val store = freshStore()
+    bootstrap(store)
+    // a session whose file:// FileSystem fails the deletes of this
+    // merge's staging dir and moved-in version dirs
+    val failing = graft.SessionClones.cloned("sms-failing-delete", spark) { s =>
+      s.conf.set("fs.file.impl", classOf[FailingDeleteFileSystem].getName)
+      s.conf.set("fs.file.impl.disable.cache", "true")
+    }
+    def cleanupTarget(p: org.apache.hadoop.fs.Path): Boolean =
+      p.getName.startsWith("store__staging_") || p.getName.startsWith("__e=")
+    def batch() = failing.createDataFrame(Seq((2L, "b2", "d1", 20L)))
+      .toDF("id", "v", "day", "ts")
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    SnapshotMerge.publishPreCommitHook = () =>
+      throw new IllegalStateException("injected pre-commit failure")
+    try {
+      FailingDeleteFileSystem.failure = p =>
+        if (cleanupTarget(p)) {
+          attempts.incrementAndGet()
+          Some(new java.io.IOException(s"injected delete failure: $p"))
+        } else None
+      val e = intercept[IllegalStateException] {
+        SnapshotMerge.upsert(failing, store, batch(), Seq("id"), "day")
+      }
+      assert(e.getMessage === "injected pre-commit failure",
+        s"the merge's own error must surface, not the cleanup's: $e")
+      assert(attempts.get() >= 2, "both the moved-in dir and the staging delete were tried")
+      assert(SnapshotMerge.committedEpochs(spark, store) === Seq(1L))
+      assert(asMap(SnapshotMerge.read(spark, store))(2L) === ("b", "d1", 10L))
+      FailingDeleteFileSystem.failure = p =>
+        if (cleanupTarget(p)) Some(new FailingDeleteFileSystem.InjectedFatal) else None
+      intercept[FailingDeleteFileSystem.InjectedFatal] {
+        SnapshotMerge.upsert(failing, store, batch(), Seq("id"), "day")
+      }
+      assert(SnapshotMerge.committedEpochs(spark, store) === Seq(1L))
+    } finally {
+      FailingDeleteFileSystem.failure = _ => None
+      SnapshotMerge.publishPreCommitHook = () => ()
+    }
   }
 
   test("q110 registered query runs and is stable across invocations") {

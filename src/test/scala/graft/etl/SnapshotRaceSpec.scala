@@ -1,12 +1,11 @@
 package graft.etl
 
 import graft.SparkSuite
-import graft.sources.CommitMarker
 import org.apache.spark.sql.functions._
 
 /** Real-THREAD races on one snapshot store (r16 verdict #6): the commit
-  * protocol was proven for interleaved upserts (MergeConcurrencySpec)
-  * and for deterministic single-point injections (SnapshotMergeSpec) —
+  * protocol is proven for deterministic single-point injections
+  * (SnapshotMergeSpec) —
   * this spec runs compact ∥ deleteWhere ∥ upsert as genuinely
   * concurrent driver threads, each retrying on the protocol's abort
   * exception, and checks the only outcomes the protocol promises:
@@ -52,7 +51,7 @@ class SnapshotRaceSpec extends SparkSuite {
           attempts.incrementAndGet()
           try { op; done = true }
           catch {
-            case _: CommitMarker.ConcurrentWriteException =>
+            case _: SnapshotMerge.ConcurrentWriteException =>
               aborts.incrementAndGet()
               Thread.sleep(20)
             case e: Throwable =>
@@ -177,7 +176,7 @@ class SnapshotRaceSpec extends SparkSuite {
           // losing a commit race is the protocol working, not a failure
           try SnapshotMerge.upsert(spark, store,
             batch("b", 50 until 60), Seq("id"), "day")
-          catch { case _: CommitMarker.ConcurrentWriteException => () }
+          catch { case _: SnapshotMerge.ConcurrentWriteException => () }
           Thread.sleep(120)
         }
       }
@@ -199,7 +198,7 @@ class SnapshotRaceSpec extends SparkSuite {
           tries += 1
           try { outcome = Right(SnapshotMerge.restoreTo(spark, store, 2L)); done = true }
           catch {
-            case _: CommitMarker.ConcurrentWriteException => Thread.sleep(50)
+            case _: SnapshotMerge.ConcurrentWriteException => Thread.sleep(50)
             case e: IllegalArgumentException
                 if e.getMessage.contains("manifest is gone") =>
               outcome = Left(e); done = true
